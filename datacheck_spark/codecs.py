@@ -618,7 +618,15 @@ def decode_jpeg(data: bytes) -> Dict[str, Any]:
             "channels": bands,
             "pixels": px,
         }
+    try:
+        return _decode_jpeg_pure(data)
+    except (KeyError, IndexError, struct.error) as e:
+        # a scan naming an undeclared DHT/DQT table, or a short SOF/DRI/
+        # SOS segment, is a corrupt stream like any other
+        raise ValueError(f"JPEG: malformed tables or segment ({e!r})") from e
 
+
+def _decode_jpeg_pure(data: bytes) -> Dict[str, Any]:
     qt: Dict[int, np.ndarray] = {}
     huff_dc: Dict[int, Any] = {}
     huff_ac: Dict[int, Any] = {}

@@ -350,7 +350,6 @@ class ValidationEngine:
         compute_distribution: bool = True,
         detect_anomalies: bool = True,
         reference_df: Optional[DataFrame] = None,
-        persist: bool = True,
     ) -> CheckResult:
         """Full check pipeline mirroring ``DataChecker.check``
         (``checker.py:78-181``): fused rules → summary; then dup groups,
@@ -370,9 +369,7 @@ class ValidationEngine:
         )
 
         rules = self.compile(df)
-        annotated = self.annotate(df, rules=rules)
-        if persist:
-            annotated = annotated.persist()
+        annotated = self.annotate(df, rules=rules).persist()
         try:
             result = self.summarize(annotated, rules, id_col=id_col)
             if result.total_samples == 0:
@@ -417,5 +414,4 @@ class ValidationEngine:
                 )
             return result
         finally:
-            if persist:
-                annotated.unpersist()
+            annotated.unpersist()

@@ -10,22 +10,14 @@ to a cell neighborhood instead of the full corpus.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from datacheck_spark.dedup import cosine_similarity
-
-
-def _norm(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
 
 
 def brute_force_topk(
@@ -212,21 +204,4 @@ def ivf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
-
-
-def pairwise_within_threshold(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold via cell-bucketed self-join —
-    the embedding near-dup sweep (delegates to dedup module)."""
-    from datacheck_spark.dedup import embedding_near_duplicates
-
-    return embedding_near_duplicates(
-        df, vec_col, id_col, threshold=threshold, lsh_planes=planes, seed=seed
     )

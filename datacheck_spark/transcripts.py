@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datacheck_spark.schema import Severity, TRANSCRIPT_ROLES, ValidationSchema
-from datacheck_spark.engine import ValidationEngine, HAS_ERROR, RULE_PREFIX
+from datacheck_spark.engine import ValidationEngine, HAS_ERROR
 from datacheck_spark.rules.compiler import (
     CompiledRule,
     RuleDef,
@@ -317,63 +317,27 @@ def conversation_structure(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     At 10^12 turns this runs per conv_bucket partition exactly like
     the fused rule pass.
     """
-    slim = df.select(*_structure_slim_cols(df, ts_col))
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("role").asc(), F.col(ts_col).asc()
-    )
-    prev_idx = F.lag("turn_idx").over(w)
-    prev_role = F.lag("role").over(w)
-    prev_ts = F.lag(ts_col).over(w)
-    cur_idx, cur_role, cur_ts = (
-        F.col("turn_idx"), F.col("role"), F.col(ts_col)
-    )
-    unpaired = (cur_role == "tool") & ~F.coalesce(
-        prev_role == "assistant", F.lit(False)
-    )
-    flags = slim.select(
-        "conv_id",
-        "turn_idx",
-        (prev_idx.isNotNull() & (cur_idx == prev_idx))
-        .cast("int").alias("__dup_turn"),
-        (prev_idx.isNotNull() & (cur_idx > prev_idx + 1))
-        .cast("int").alias("__gap_turn"),
-        (prev_role.isNotNull() & (cur_role == prev_role))
-        .cast("int").alias("__role_repeat"),
-        (prev_ts.isNotNull() & (cur_ts < prev_ts))
-        .cast("int").alias("__ts_regress"),
-        F.coalesce(unpaired, F.lit(False))
-        .cast("int").alias("__unpaired_tool"),
-        F.col("__empty").cast("int").alias("__empty_asst"),
-    )
+    flags = _structure_flags(df, ts_col)
+
+    def none(flag: str) -> Column:
+        return F.coalesce(F.sum(F.col(flag).cast("int")), F.lit(0)) == 0
+
     agg = flags.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
-        (F.min("turn_idx") == 0).alias("__starts"),
-        (F.coalesce(F.sum("__dup_turn"), F.lit(0)) == 0).alias("__nodup"),
-        (F.coalesce(F.sum("__gap_turn"), F.lit(0)) == 0).alias("__nogap"),
-        (F.coalesce(F.sum("__role_repeat"), F.lit(0)) == 0).alias(
-            "roles_alternate"
-        ),
-        (F.coalesce(F.sum("__ts_regress"), F.lit(0)) == 0).alias(
-            "ts_monotonic"
-        ),
-        (F.coalesce(F.sum("__unpaired_tool"), F.lit(0)) == 0).alias(
-            "tool_turns_paired"
-        ),
-        (F.coalesce(F.sum("__empty_asst"), F.lit(0)) == 0).alias(
-            "no_empty_assistant"
-        ),
-    )
-    contiguous = F.col("__starts") & F.col("__nodup") & F.col("__nogap")
-    return agg.select(
-        "conv_id",
-        "n_turns",
-        contiguous.alias("contiguous"),
-        "roles_alternate",
-        "ts_monotonic",
-        "tool_turns_paired",
-        "no_empty_assistant",
         (
-            contiguous
+            (F.min("turn_idx") == 0)
+            & none("__dup_turn")
+            & none("__gap_turn")
+        ).alias("contiguous"),
+        none("__role_repeat").alias("roles_alternate"),
+        none("__ts_regress").alias("ts_monotonic"),
+        none("__unpaired_tool").alias("tool_turns_paired"),
+        none("__empty").alias("no_empty_assistant"),
+    )
+    return agg.select(
+        "*",
+        (
+            F.col("contiguous")
             & F.col("roles_alternate")
             & F.col("ts_monotonic")
             & F.col("tool_turns_paired")
@@ -382,13 +346,20 @@ def conversation_structure(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def _structure_slim_cols(df: DataFrame, ts_col: str) -> list:
-    """Narrow pre-shuffle projection for the structure passes:
-    ``(conv_id, turn_idx, role, ts, __empty[, __tlen])`` — the text
-    payload is reduced to the empty-assistant boolean (and its length,
-    for violation ``observed`` strings) before the conv_id exchange,
-    so the window sort never ships document bytes."""
-    role = F.col("role")
+def _structure_flags(df: DataFrame, ts_col: str) -> DataFrame:
+    """The six cross-turn conditions, defined once for the verdicts and
+    the violation rows. The slim pre-shuffle projection ``(conv_id,
+    turn_idx, role, ts, __empty, __tlen)`` reduces the text payload to
+    the empty-assistant boolean (and its length, for violation
+    ``observed`` strings) before the conv_id exchange, so the window
+    sort never ships document bytes. One lag window over (conv_id;
+    turn_idx, role, ts) then adds per turn the lagged
+    ``__prev_idx``/``__prev_role``/``__prev_ts`` and the non-null
+    booleans ``__dup_turn``, ``__gap_turn``, ``__role_repeat``,
+    ``__ts_regress``, ``__unpaired_tool`` (``__empty`` is the sixth).
+    Each pair condition anchors at the LATER turn of the pair; a first
+    turn has no predecessor, so only its role and text can flag it."""
+    idx, role, ts = F.col("turn_idx"), F.col("role"), F.col(ts_col)
     if "text" in df.columns:
         empty = F.coalesce(
             (role == "assistant")
@@ -398,15 +369,28 @@ def _structure_slim_cols(df: DataFrame, ts_col: str) -> list:
         tlen = F.length("text")
     else:
         empty, tlen = F.lit(False), F.lit(None).cast("int")
-    return [
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        role,
-        F.col(ts_col),
-        empty.alias("__empty"),
-        tlen.alias("__tlen"),
-    ]
-
+    w = Window.partitionBy("conv_id").orderBy(idx.asc(), role.asc(), ts.asc())
+    lagged = df.select(
+        "conv_id", idx, role, ts, empty.alias("__empty"), tlen.alias("__tlen")
+    ).select(
+        "*",
+        F.lag(idx).over(w).alias("__prev_idx"),
+        F.lag(role).over(w).alias("__prev_role"),
+        F.lag(ts).over(w).alias("__prev_ts"),
+    )
+    prev_idx, prev_role = F.col("__prev_idx"), F.col("__prev_role")
+    conds = {
+        "__dup_turn": idx == prev_idx,
+        "__gap_turn": idx > prev_idx + 1,
+        "__role_repeat": role == prev_role,
+        "__ts_regress": ts < F.col("__prev_ts"),
+        "__unpaired_tool": (role == "tool")
+        & ~F.coalesce(prev_role == "assistant", F.lit(False)),
+    }
+    return lagged.select(
+        "*",
+        *[F.coalesce(c, F.lit(False)).alias(n) for n, c in conds.items()],
+    )
 
 
 def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -434,89 +418,60 @@ def structure_violations(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     built from turn_idx/role/ts/text-length, all invariant across
     (turn_idx, role)-tie arrangements under the ts tie-break.
     """
-    df = df.select(*_structure_slim_cols(df, ts_col))
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("role").asc(), F.col(ts_col).asc()
-    )
-    prev_idx = F.lag("turn_idx").over(w)
-    prev_role = F.lag("role").over(w)
-    prev_ts = F.lag(ts_col).over(w)
-    cur_idx, cur_role, cur_ts = (
-        F.col("turn_idx"), F.col("role"), F.col(ts_col)
-    )
+    flags = _structure_flags(df, ts_col)
+    idx, role, ts = F.col("turn_idx"), F.col("role"), F.col(ts_col)
+    prev_idx = F.col("__prev_idx").cast("string")
     checks = [
         (
             "duplicate_turn",
-            prev_idx.isNotNull() & (cur_idx == prev_idx),
-            F.concat_ws(
-                "", F.lit("turn_idx "), cur_idx.cast("string"),
-                F.lit(" repeats"),
-            ),
+            "__dup_turn",
+            [F.lit("turn_idx "), idx.cast("string"), F.lit(" repeats")],
         ),
         (
             "turn_gap",
-            prev_idx.isNotNull() & (cur_idx > prev_idx + 1),
-            F.concat_ws(
-                "", F.lit("prev turn_idx "), prev_idx.cast("string"),
-                F.lit(" -> "), cur_idx.cast("string"),
-            ),
+            "__gap_turn",
+            [F.lit("prev turn_idx "), prev_idx, F.lit(" -> "),
+             idx.cast("string")],
         ),
         (
             "role_repeat",
-            prev_role.isNotNull() & (cur_role == prev_role),
-            F.concat_ws(
-                "", F.lit("role "), cur_role, F.lit(" repeats"),
-            ),
+            "__role_repeat",
+            [F.lit("role "), role, F.lit(" repeats")],
         ),
         (
             "ts_regression",
-            prev_ts.isNotNull() & (cur_ts < prev_ts),
-            F.concat_ws(
-                "", F.lit("ts "), cur_ts.cast("string"),
-                F.lit(" < prev "), prev_ts.cast("string"),
-            ),
+            "__ts_regress",
+            [F.lit("ts "), ts.cast("string"), F.lit(" < prev "),
+             F.col("__prev_ts").cast("string")],
         ),
-    ]
-    unpaired = (cur_role == "tool") & ~F.coalesce(
-        prev_role == "assistant", F.lit(False)
-    )
-    checks.append(
         (
             "unpaired_tool_turn",
-            F.coalesce(unpaired, F.lit(False)),
-            F.concat_ws(
-                "", F.lit("tool turn follows "),
-                F.coalesce(prev_role, F.lit("start")),
-            ),
-        )
-    )
-    checks.append(
+            "__unpaired_tool",
+            [F.lit("tool turn follows "),
+             F.coalesce(F.col("__prev_role"), F.lit("start"))],
+        ),
         (
             "empty_assistant_turn",
-            F.col("__empty"),
-            F.concat_ws(
-                "", F.lit("assistant text blank (len "),
-                F.coalesce(
-                    F.col("__tlen").cast("string"), F.lit("null")
-                ),
-                F.lit(")"),
-            ),
-        )
-    )
-    flagged = df.select(
+            "__empty",
+            [F.lit("assistant text blank (len "),
+             F.coalesce(F.col("__tlen").cast("string"), F.lit("null")),
+             F.lit(")")],
+        ),
+    ]
+    flagged = flags.select(
         "conv_id",
         "turn_idx",
         F.filter(
             F.array(
                 *[
                     F.when(
-                        F.coalesce(cond, F.lit(False)),
+                        F.col(flag),
                         F.struct(
                             F.lit(rid).alias("rule_id"),
-                            obs.alias("observed"),
+                            F.concat_ws("", *obs).alias("observed"),
                         ),
                     )
-                    for rid, cond, obs in checks
+                    for rid, flag, obs in checks
                 ]
             ),
             lambda s: s.isNotNull(),
@@ -784,14 +739,9 @@ class TranscriptChecker:
         df: DataFrame,
         tools_df: Optional[DataFrame] = None,
         detect_anomalies: bool = True,
-        anomaly_keys: bool = False,
-        persist: bool = True,
     ) -> TranscriptCheckReport:
-        """``anomaly_keys=True`` additionally collects a bounded sample
-        of offending (conv_id, turn_idx) keys per anomalous field — two
-        extra filter+sort jobs; off by default (counts and bounds are
-        enough for the report; full rows live in the violations
-        table)."""
+        """Anomalies report counts and bounds only, no offending-key
+        sample (full rows live in the violations table)."""
         from datacheck_spark import anomaly as A
         from datacheck_spark import dedup as D
         from datacheck_spark import referential as R
@@ -800,12 +750,11 @@ class TranscriptChecker:
         annotated = self.engine.annotate(df, rules=rules)
         # after the fused pass only the text LENGTH is consumed (anomaly)
         # — dropping the text payload shrinks the persisted frame ~4×
-        slim = annotated.withColumn(
-            "__text_len", F.length("text").cast("double")
-        ).drop("text")
-        if persist:
-            slim = slim.persist()
-        annotated = slim
+        annotated = (
+            annotated.withColumn("__text_len", F.length("text").cast("double"))
+            .drop("text")
+            .persist()
+        )
         try:
             # the orphan-tool referential check broadcasts a tiny
             # vocabulary, so it folds into the SAME summary aggregation
@@ -890,7 +839,6 @@ class TranscriptChecker:
                 raw = A.detect_anomalies(
                     annotated,
                     cols=["__text_len", "turn_idx"],
-                    key_cols=["conv_id", "turn_idx"] if anomaly_keys else None,
                     stats=stats,
                     total=base.total_samples,
                 )
@@ -906,5 +854,4 @@ class TranscriptChecker:
                 )
             return report
         finally:
-            if persist:
-                annotated.unpersist()
+            annotated.unpersist()

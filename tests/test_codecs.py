@@ -268,8 +268,9 @@ def _gradient_rgb(h: int, w: int) -> np.ndarray:
     )
 
 
-def _strip_segments(data: bytes, markers: set) -> bytes:
-    """Remove whole marker segments (e.g. DHT) from a JPEG stream."""
+def _strip_segments(data: bytes, markers: set, table=None) -> bytes:
+    """Remove whole marker segments (e.g. DHT) from a JPEG stream; with
+    ``table``, only those whose first table byte (class/id) equals it."""
     out = bytearray(data[:2])
     pos = 2
     while pos + 2 <= len(data):
@@ -279,7 +280,7 @@ def _strip_segments(data: bytes, markers: set) -> bytes:
             out += data[pos : pos + 2]
             break
         (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        if m not in markers:
+        if m not in markers or table not in (None, data[pos + 4]):
             out += data[pos : pos + 2 + seglen]
         pos += 2 + seglen
         if m == 0xDA:
@@ -365,6 +366,22 @@ class TestJpegFullCodec:
         d1 = codecs.decode_jpeg(stripped)
         assert np.array_equal(d0["pixels"], d1["pixels"])
 
+    def test_partial_tables_raise_value_error(self):
+        """A frame that declares some tables but not the ones its scan
+        names, or a short DRI segment, is corrupt input: ValueError,
+        never KeyError/struct.error out of the decoder."""
+        if codecs._PIL:
+            pytest.skip("targets the pure decoder")
+        enc = codecs.encode_jpeg(_gradient_rgb(16, 16), quality=90)
+        no_chroma_ac = _strip_segments(enc, {0xC4}, table=0x11)
+        no_chroma_q = _strip_segments(enc, {0xDB}, table=0x01)
+        sof = enc.find(b"\xff\xc0")
+        short_dri = enc[:sof] + b"\xff\xdd\x00\x02" + enc[sof:]
+        for bad in (no_chroma_ac, no_chroma_q, short_dri):
+            assert len(bad) != len(enc)
+            with pytest.raises(ValueError):
+                codecs.decode_jpeg(bad)
+
     def test_progressive_falls_back_to_header(self):
         if codecs._PIL:
             pytest.skip("Pillow decodes progressive streams")
@@ -417,3 +434,30 @@ class TestAviFrameExtraction:
     def test_rejects_non_avi(self):
         with pytest.raises(ValueError):
             codecs.avi_video_frames(b"garbage")
+
+
+def test_sample_video_frames_partial_tables_yield_error_rows(spark):
+    """An AVI whose MJPEG frames lack the chroma AC Huffman table yields
+    ``decode_status='error'`` rows instead of failing the Spark task."""
+    import pandas as pd
+
+    from datacheck_spark import multimodal as MM
+
+    if codecs._PIL:
+        pytest.skip("targets the pure decoder")
+    frame = _strip_segments(
+        codecs.encode_jpeg(_gradient_rgb(24, 32), quality=88),
+        {0xC4},
+        table=0x11,
+    )
+    avi = codecs.encode_avi(32, 24, n_frames=50, fps=25, frame_payload=frame)
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [("m_partial", "video", "video/avi", avi, 32, 24, 2000)],
+            columns=[f.name for f in MM.MEDIA_SCHEMA.fields],
+        ),
+        schema=MM.MEDIA_SCHEMA,
+    )
+    rows = MM.sample_video_frames(df, every_ms=1000).collect()
+    assert [r["frame_idx"] for r in rows] == [0, 25]
+    assert {r["decode_status"] for r in rows} == {"error"}

@@ -2,9 +2,35 @@
 cases, evaluated through Spark Columns over small DataFrames."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from datacheck_spark.rules import text as T
+
+
+def _repetitive(col):
+    """True ⇒ repetitive, through the production column."""
+    return ~T.repetitive_clean(col)
+
+
+# fragments that straddle the repetitive gate: separators (ASCII and
+# CJK), 10-char windows, short segments, blanks and astral-plane chars
+_FRAGMENTS = st.sampled_from(
+    [
+        "hello world", "This is repeated. ", "xxxxxxxxxx", "0123456789",
+        "。句子内容比较长一些。", "short", " ", "\n", "!?.", ".", "a",
+        "ÀÁÂÃ", "\x00\x01", "これはにほんご", "😀", "abcdef. ",
+    ]
+)
+_TEXT = st.one_of(
+    st.lists(_FRAGMENTS, min_size=0, max_size=30).map("".join),
+    # a short pattern repeated: window mode with and without separators
+    st.tuples(
+        st.lists(_FRAGMENTS, min_size=1, max_size=3).map("".join),
+        st.integers(1, 20),
+    ).map(lambda p: p[0] * p[1]),
+)
+_CORPUS = st.lists(_TEXT, min_size=1, max_size=40)
 
 
 def flags(spark, texts, expr_fn):
@@ -64,27 +90,30 @@ class TestRepetitive:
          "Variety is the spice of life.", False),
     ]
 
-    def test_native_goldens(self, spark):
-        got = flags(spark, [c[0] for c in self.CASES], T.repetitive_flag_native)
+    def test_goldens(self, spark):
+        got = flags(spark, [c[0] for c in self.CASES], _repetitive)
         assert got == [c[1] for c in self.CASES]
 
-    def test_native_matches_python_port(self, spark):
-        """The codegen implementation must agree with the exact Python
-        port on every case (including generated transcripts)."""
+    def test_matches_python_port(self, spark):
+        """The production column (JVM gate + Arrow UDF) must agree with
+        the exact Python port on every case."""
         texts = [c[0] for c in self.CASES] + [
             "ab. " * 30,                     # segments <= 5 chars -> filtered
             ("Hello world this is fine. " * 3) + "Unique tail sentence here.",
             "0123456789" * 11,               # exact window repeats
             None,
         ]
-        df = spark.createDataFrame([Row(i=i, t=t) for i, t in enumerate(texts)])
-        rows = df.select(
-            "i",
-            T.repetitive_flag_native(F.col("t")).alias("native"),
-        ).orderBy("i").collect()
-        for r, t in zip(rows, texts):
-            expected = T._repetitive_one(t)
-            assert bool(r["native"]) == expected, f"text={t!r:.60}"
+        for t, got in zip(texts, flags(spark, texts, _repetitive)):
+            assert got == T._repetitive_one(t), f"text={t!r:.60}"
+
+    @settings(max_examples=5, deadline=None)
+    @given(_CORPUS)
+    def test_fuzz_matches_python_port(self, spark, corpus):
+        """Differential fuzz: generated corpora through the production
+        column vs the Python port (the reference-parity modules need the
+        reference checkout; this one runs everywhere)."""
+        for t, got in zip(corpus, flags(spark, corpus, _repetitive)):
+            assert got == T._repetitive_one(t), repr(t)[:80]
 
 
 class TestLanguage:
@@ -142,14 +171,15 @@ class TestNgrams:
 
 
 def test_repetitive_udf_gate_parity(spark):
-    """The vectorized pre-gate in repetitive_flag must be a NECESSARY
-    condition: UDF output == per-row reference port on boundary cases
-    (len 49/50/100/101, exactly 1 vs 2 separators, CJK separators)."""
-    from pyspark.sql import functions as F
-
+    """The JVM mask in repetitive_clean must be a NECESSARY condition:
+    its output == per-row reference port on boundary cases (len
+    49/50/100/101, exactly 1 vs 2 separators, CJK separators, and an
+    astral-plane char where Spark ``length`` and Python ``len`` must
+    both count code points, not UTF-16 units)."""
     seg = "abcdef"  # len 6 > 5
     cases = [
         None, "", "x" * 49, "x" * 50, "x" * 100, "x" * 101,
+        "x" * 49 + "\U0001F600",            # 50 code points, 51 UTF-16 units
         ("y" * 10 + ". ") * 10,             # many separators, repeated
         (seg + ". ") * 3 + "z" * 30,        # 3 identical segments
         (seg + "。") * 6,                    # CJK separator
@@ -160,7 +190,9 @@ def test_repetitive_udf_gate_parity(spark):
     df = spark.createDataFrame([(t,) for t in cases], "t string").coalesce(1)
     rows = df.select(
         "t",
-        F.coalesce(T.repetitive_flag(F.col("t")), F.lit(False)).alias("udf"),
+        F.length("t").alias("n"),
+        _repetitive(F.col("t")).alias("flag"),
     ).collect()
     for r in rows:
-        assert r["udf"] == T._repetitive_one(r["t"]), repr(r["t"])[:60]
+        assert r["n"] == (None if r["t"] is None else len(r["t"]))
+        assert r["flag"] == T._repetitive_one(r["t"]), repr(r["t"])[:60]

@@ -288,14 +288,15 @@ def test_conversation_structure_plan_shape(spark, transcripts):
     and the per-conversation agg, and the window sort is TEXT-FREE —
     the text payload is reduced to the __empty boolean before the
     exchange, so document bytes never ship through the shuffle."""
-    import re
-
     from datacheck_spark.transcripts import conversation_structure
 
-    plan = (
-        conversation_structure(transcripts)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    _assert_one_text_free_window(conversation_structure(transcripts))
+
+
+def _assert_one_text_free_window(df):
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
     # the stable order is (turn_idx, role, ts) — no text in the sort
     assert re.search(
@@ -500,6 +501,53 @@ def test_structure_violations_planted(spark):
         "assistant text blank (len 2)"
     )
     assert len(got) == 7
+
+
+def test_structure_violations_plan_shape(spark, transcripts):
+    """The violation rows share the verdicts' shape: one conv_id
+    exchange and a text-free (turn_idx, role, ts) window sort."""
+    from datacheck_spark.transcripts import structure_violations
+
+    _assert_one_text_free_window(structure_violations(transcripts))
+
+
+def test_structure_verdicts_match_violation_rows(spark, transcripts):
+    """Both outputs read the same flags: a conversation fails a verdict
+    exactly when structure_violations emits the matching rule id."""
+    from datacheck_spark.transcripts import (
+        conversation_structure,
+        structure_violations,
+    )
+
+    # the generator's ts is monotone: plant regressions at turn 1 of
+    # every 7th conversation so the ts pair is not vacuous
+    df = transcripts.withColumn(
+        "ts",
+        F.when(
+            (F.pmod(F.xxhash64("conv_id"), F.lit(7)) == 0)
+            & (F.col("turn_idx") == 1),
+            F.col("ts") - F.expr("INTERVAL 1 DAY"),
+        ).otherwise(F.col("ts")),
+    )
+    verdicts = conversation_structure(df).collect()
+    emitted = {
+        (r["conv_id"], r["rule_id"])
+        for r in structure_violations(df).select("conv_id", "rule_id")
+        .distinct()
+        .collect()
+    }
+    pairs = {
+        "roles_alternate": {"role_repeat"},
+        "ts_monotonic": {"ts_regression"},
+        "tool_turns_paired": {"unpaired_tool_turn"},
+        "no_empty_assistant": {"empty_assistant_turn"},
+        # every generated conversation starts at turn 0
+        "contiguous": {"duplicate_turn", "turn_gap"},
+    }
+    for verdict, rule_ids in pairs.items():
+        failing = {r["conv_id"] for r in verdicts if not r[verdict]}
+        flagged = {c for c, rid in emitted if rid in rule_ids}
+        assert failing and failing == flagged, verdict
 
 
 def test_conversation_dedup_planted(spark):
