@@ -5,29 +5,29 @@ metrics". Production shape: an Iceberg checkpoint table keyed by
 (snapshot-id, partition-spec, rule-version) — in this sandbox the same
 contract runs over parquet results plus an atomically-renamed JSON
 manifest, keeping the API identical so Iceberg is a config swap
-(SURVEY §7.4).
+(SURVEY §7.4). The partition spec is ``n_buckets``.
 
-Work is partitioned by ``pmod(xxhash64(conv_id), n_buckets)`` — the
-same conv_id hash-bucketing the table itself is partitioned by, so each
-unit prunes to a slice of the scan (partition pruning via the
-``conv_bucket`` column when present, else a filter on the hash).
-Buckets are processed in groups; after each group commits its violation
-rows (partitioned write) the manifest records the bucket's metrics and
-lineage. Resume skips completed buckets — an anti-join expressed as a
-partition filter, which Catalyst turns into scan pruning rather than a
-join.
+Work is partitioned by ``pmod(xxhash64(conv_id), n_buckets)``. Buckets
+are processed in groups; each group is ONE Spark job — the violation
+write, partitioned by bucket — and two ``DataFrame.observe``
+observations on that write count each bucket's input rows and violation
+rows, so the manifest's per-bucket metrics cost no extra scan. After
+each group the manifest records every bucket's own metrics and lineage.
+Resume skips completed buckets — an anti-join expressed as a filter on
+the bucket id.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from dataclasses import dataclass
 from pathlib import Path
-from typing import Any, Dict, List, Optional, Sequence
+from typing import Any, Dict, List
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
@@ -38,6 +38,7 @@ class CheckpointState:
     path: str
     rule_version: str
     snapshot_id: str
+    n_buckets: int
     buckets: Dict[str, Dict[str, Any]]
 
     @property
@@ -50,22 +51,19 @@ def _manifest_path(base: str) -> Path:
 
 
 def load_state(
-    base: str, rule_version: str, snapshot_id: str
+    base: str, rule_version: str, snapshot_id: str, n_buckets: int = 32
 ) -> CheckpointState:
     """Load (or initialize) the manifest. A manifest written by a
-    different rule version or input snapshot is discarded — lineage
-    mismatch means prior partial results are not reusable."""
+    different rule version, input snapshot or bucket count is discarded —
+    lineage mismatch means prior partial results are not reusable."""
+    lineage = (rule_version, snapshot_id, n_buckets)
+    buckets: Dict[str, Dict[str, Any]] = {}
     p = _manifest_path(base)
     if p.exists():
         data = json.loads(p.read_text(encoding="utf-8"))
-        if (
-            data.get("rule_version") == rule_version
-            and data.get("snapshot_id") == snapshot_id
-        ):
-            return CheckpointState(
-                base, rule_version, snapshot_id, data.get("buckets", {})
-            )
-    return CheckpointState(base, rule_version, snapshot_id, {})
+        if (data.get("rule_version"), data.get("snapshot_id"), data.get("n_buckets")) == lineage:
+            buckets = data.get("buckets", {})
+    return CheckpointState(base, *lineage, buckets)
 
 
 def save_state(state: CheckpointState) -> None:
@@ -75,6 +73,7 @@ def save_state(state: CheckpointState) -> None:
         {
             "rule_version": state.rule_version,
             "snapshot_id": state.snapshot_id,
+            "n_buckets": state.n_buckets,
             "buckets": state.buckets,
         },
         indent=1,
@@ -83,69 +82,6 @@ def save_state(state: CheckpointState) -> None:
     with os.fdopen(fd, "w", encoding="utf-8") as f:
         f.write(payload)
     os.replace(tmp, _manifest_path(state.path))
-
-
-class CheckpointedRunner:
-    """Run a per-bucket validation job with resume.
-
-    ``job(bucket_df) -> Dict[str, Any]`` processes one bucket's rows
-    (e.g. writes its violation rows) and returns metrics recorded in
-    the manifest. Buckets are derived from ``xxhash64(key_col)`` so the
-    assignment is stable across runs regardless of file layout.
-    """
-
-    def __init__(
-        self,
-        base_path: str,
-        rule_version: str,
-        n_buckets: int = 32,
-        group_size: int = 8,
-        key_col: str = "conv_id",
-        bucket_col: Optional[str] = None,
-    ):
-        """``bucket_col`` may name a precomputed physical-partition
-        column — it MUST equal ``pmod(xxhash64(key_col), n_buckets)``
-        with the SAME ``n_buckets`` (e.g. the generator's
-        ``conv_bucket`` with its default 32); then the group filter
-        prunes at the scan instead of evaluating the hash."""
-        self.base_path = base_path
-        self.rule_version = rule_version
-        self.n_buckets = n_buckets
-        self.group_size = group_size
-        self.key_col = key_col
-        self.bucket_col = bucket_col
-
-    def _bucket_expr(self, df: DataFrame):
-        if self.bucket_col and self.bucket_col in df.columns:
-            return F.col(self.bucket_col)
-        return F.pmod(F.xxhash64(self.key_col), F.lit(self.n_buckets))
-
-    def run(
-        self,
-        df: DataFrame,
-        job,
-        snapshot_id: str = "static",
-    ) -> CheckpointState:
-        """Process all incomplete bucket groups; each group is one Spark
-        job over a pruned slice of the scan; manifest committed after
-        each group (kill-and-rerun resumes at the next group)."""
-        state = load_state(self.base_path, self.rule_version, snapshot_id)
-        done = set(state.completed)
-        pending = [b for b in range(self.n_buckets) if b not in done]
-        bexpr = self._bucket_expr(df)
-        for i in range(0, len(pending), self.group_size):
-            group = pending[i : i + self.group_size]
-            part = df.where(bexpr.isin([int(b) for b in group]))
-            metrics = job(part, group)
-            for b in group:
-                state.buckets[str(b)] = {
-                    "done": True,
-                    "rule_version": self.rule_version,
-                    "snapshot_id": snapshot_id,
-                    "metrics": metrics,
-                }
-            save_state(state)
-        return state
 
 
 def checkpointed_violations(
@@ -159,37 +95,47 @@ def checkpointed_violations(
 ) -> CheckpointState:
     """Write the transcript violation rows bucket-group by bucket-group
     with resume; output parquet is partitioned by bucket so a re-run
-    overwrites only its own partitions (dynamic partition overwrite)."""
+    overwrites only its own partitions (dynamic partition overwrite).
+    The manifest is committed after each group (kill-and-rerun resumes
+    at the next group)."""
     out_dir = str(Path(base_path) / "violations")
-
-    def job(part: DataFrame, group: Sequence[int]) -> Dict[str, Any]:
-        spark = part.sparkSession
+    state = load_state(base_path, rule_version, snapshot_id, n_buckets)
+    if not state.buckets:
+        # fresh lineage: rows left by another rule version, snapshot or
+        # bucket count would survive a dynamic overwrite
+        shutil.rmtree(out_dir, ignore_errors=True)
+    done = set(state.completed)
+    pending = [b for b in range(n_buckets) if b not in done]
+    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+    for i in range(0, len(pending), group_size):
+        group = pending[i : i + group_size]
+        # both frames carry conv_id, so one expression counts the
+        # group's input rows and its exploded violation rows per bucket
+        per_bucket = [F.count_if(bucket == b).alias(str(b)) for b in group]
+        seen, wrote = Observation(), Observation()
+        part = df.where(bucket.isin(group)).observe(seen, *per_bucket)
         # order-insensitive store: skip the global sort (its range-
         # sampling job would re-run the fused rule pass a second time)
-        v = checker.violations(part, ordered=False).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
+        (
+            checker.violations(part, ordered=False)
+            .withColumn("bucket", bucket)
+            .observe(wrote, *per_bucket)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(out_dir)
         )
-        # dynamic partition overwrite: a re-run of a group replaces only
-        # its own bucket= partitions, never earlier groups' output
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            v.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        n_rows = part.count()
-        n_viol = (
-            part.sparkSession.read.parquet(out_dir)
-            .where(F.col("bucket").isin([int(b) for b in group]))
-            .count()
-        )
-        return {"rows": n_rows, "violations": n_viol, "buckets": list(map(int, group))}
-
-    runner = CheckpointedRunner(
-        base_path,
-        rule_version,
-        n_buckets=n_buckets,
-        group_size=group_size,
-    )
-    return runner.run(df, job, snapshot_id=snapshot_id)
+        rows, violations = seen.get, wrote.get
+        for b in group:
+            state.buckets[str(b)] = {
+                "done": True,
+                "rule_version": rule_version,
+                "snapshot_id": snapshot_id,
+                "metrics": {
+                    "rows": rows[str(b)],
+                    "violations": violations[str(b)],
+                    "buckets": group,
+                },
+            }
+        save_state(state)
+    return state

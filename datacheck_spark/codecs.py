@@ -1,5 +1,4 @@
-"""Real media codecs over binary columns, stdlib-only with an optional
-Pillow fast path.
+"""Real media codecs over binary columns, stdlib + numpy only.
 
 This container ships no image/audio libraries, so the decoders here are
 implemented against the PUBLIC file-format specs with the standard
@@ -22,9 +21,8 @@ library + numpy:
 
 Encoders for PNG / BMP / JPEG / WAV exist so synthetic test media are
 REAL files round-tripped through the decoders, not look-alike bytes.
-
-If Pillow is importable it replaces the stdlib image pixel decode
-(``_PIL`` flag); the pure paths remain the tested fallback.
+The pure decoders are the only path, so decoded values do not depend
+on which imaging libraries are installed.
 """
 
 from __future__ import annotations
@@ -36,14 +34,6 @@ import zlib
 from typing import Any, Dict, Optional
 
 import numpy as np
-
-try:  # optional dependency — never required
-    from PIL import Image as _PILImage
-
-    _PIL = True
-except ImportError:  # pragma: no cover - environment dependent
-    _PILImage = None
-    _PIL = False
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -145,10 +135,6 @@ def decode_png(data: bytes) -> Dict[str, Any]:
         "channels": int(channels) if channels else None,
         "pixels": None,
     }
-    if _PIL:
-        img = _PILImage.open(io.BytesIO(data))
-        out["pixels"] = np.asarray(img)
-        return out
     if bitd == 8 and interlace == 0 and color in (0, 2, 6) and idat:
         out["pixels"] = _png_unfilter(zlib.decompress(idat), w, h, channels)
     return out
@@ -599,25 +585,14 @@ def _jpeg_header_only(w, h, nc):
 
 
 def decode_jpeg(data: bytes) -> Dict[str, Any]:
-    """Full baseline JPEG pixel decode (pure numpy/stdlib; Pillow fast
-    path when importable). Returns ``pixels`` as uint8 (h, w) gray or
-    (h, w, 3) RGB. Valid-but-unsupported modes — progressive (SOF2),
-    arithmetic coding, >8-bit precision, 4-component CMYK, or streams
-    with no scan data (the MJPEG header stub) — return real header
-    dimensions with ``pixels=None``; only corrupt streams raise."""
+    """Full baseline JPEG pixel decode (pure numpy/stdlib). Returns
+    ``pixels`` as uint8 (h, w) gray or (h, w, 3) RGB. Valid-but-
+    unsupported modes — progressive (SOF2), arithmetic coding, >8-bit
+    precision, 4-component CMYK, or streams with no scan data (the MJPEG
+    header stub) — return real header dimensions with ``pixels=None``;
+    only corrupt streams raise."""
     if data[:3] != b"\xff\xd8\xff":
         raise ValueError("not a JPEG")
-    if _PIL:
-        img = _PILImage.open(io.BytesIO(data))
-        bands = len(img.getbands())
-        px = np.asarray(img if bands == 1 else img.convert("RGB"))
-        return {
-            "format": "jpeg",
-            "width": img.width,
-            "height": img.height,
-            "channels": bands,
-            "pixels": px,
-        }
     try:
         return _decode_jpeg_pure(data)
     except (KeyError, IndexError, struct.error) as e:
@@ -1158,38 +1133,51 @@ def encode_wav(
 # codecs remain header-level.
 
 
-def decode_avi_header(data: bytes) -> Dict[str, Any]:
-    """Parse the RIFF AVI main header ('avih') plus a frame-chunk count
-    from the 'movi' list — no frame decode, pure stdlib struct walk."""
+def _avi_video_chunks(data: bytes):
+    """One RIFF walk of an AVI: the 'avih' main header and the payloads
+    of the first video stream's '##dc'/'##db' chunks inside the 'movi'
+    list, in stream order. The stream number is the position of the
+    first 'vids' stream header in 'hdrl' (00 when none is declared);
+    other streams' chunks and chunks outside 'movi' are skipped."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF AVI container")
-
     avih = None
-    n_frame_chunks = 0
-    first_frame = None
-    pos = 12
-    end = min(len(data), 8 + int.from_bytes(data[4:8], "little"))
+    n_strh = 0
+    vids = None
+    movi: list = []
 
-    def walk(lo: int, hi: int):
-        nonlocal avih, n_frame_chunks, first_frame
+    def walk(lo: int, hi: int, in_movi: bool):
+        nonlocal avih, n_strh, vids
         p = lo
         while p + 8 <= hi:
             cid = data[p : p + 4]
             size = int.from_bytes(data[p + 4 : p + 8], "little")
             body = p + 8
             if cid == b"LIST":
-                walk(body + 4, min(hi, body + size))
+                kind = data[body : body + 4]
+                walk(body + 4, min(hi, body + size), in_movi or kind == b"movi")
             elif cid == b"avih" and avih is None:
                 avih = data[body : body + min(size, 40)]
-            elif cid[2:4] in (b"dc", b"db", b"wb") and cid[:2].isdigit():
-                if first_frame is None and cid[2:4] != b"wb":
-                    first_frame = data[body : body + size]
-                n_frame_chunks += 1
+            elif cid == b"strh":
+                if vids is None and data[body : body + 4] == b"vids":
+                    vids = b"%02d" % n_strh
+                n_strh += 1
+            elif in_movi and cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
+                movi.append((cid[:2], data[body : body + size]))
             p = body + size + (size & 1)  # chunks are word-aligned
 
-    walk(pos, end)
+    walk(12, min(len(data), 8 + int.from_bytes(data[4:8], "little")), False)
+    stream = vids or b"00"
+    return avih, [payload for sid, payload in movi if sid == stream]
+
+
+def decode_avi_header(data: bytes) -> Dict[str, Any]:
+    """Parse the RIFF AVI main header ('avih') plus the video frame-chunk
+    count from the 'movi' list — no frame decode, pure stdlib struct walk."""
+    avih, frames = _avi_video_chunks(data)
     if avih is None or len(avih) < 40:
         raise ValueError("no avih main header")
+    first_frame = frames[0] if frames else None
     usec_per_frame = int.from_bytes(avih[0:4], "little")
     total_frames = int.from_bytes(avih[16:20], "little")
     width = int.from_bytes(avih[32:36], "little")
@@ -1206,7 +1194,7 @@ def decode_avi_header(data: bytes) -> Dict[str, Any]:
         "width": width,
         "height": height,
         "n_frames": total_frames,
-        "n_frame_chunks": n_frame_chunks,
+        "n_frame_chunks": len(frames),
         "fps": (1e6 / usec_per_frame) if usec_per_frame else 0.0,
         "duration_ms": int(round(total_frames * usec_per_frame / 1000)),
         "frame_width": frame_dims[0] if frame_dims else None,
@@ -1220,29 +1208,11 @@ def decode_avi_header(data: bytes) -> Dict[str, Any]:
 
 
 def avi_video_frames(data: bytes) -> list:
-    """All video-frame chunk payloads ('##dc'/'##db') from a RIFF AVI
-    'movi' list, in stream order — the frame-extraction kernel behind
-    frame sampling. Pure struct walk; each payload is one compressed
-    frame (MJPEG frames decode with :func:`decode_jpeg`)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF AVI container")
-    frames: list = []
-    end = min(len(data), 8 + int.from_bytes(data[4:8], "little"))
-
-    def walk(lo: int, hi: int):
-        p = lo
-        while p + 8 <= hi:
-            cid = data[p : p + 4]
-            size = int.from_bytes(data[p + 4 : p + 8], "little")
-            body = p + 8
-            if cid == b"LIST":
-                walk(body + 4, min(hi, body + size))
-            elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
-                frames.append(data[body : body + size])
-            p = body + size + (size & 1)
-
-    walk(12, end)
-    return frames
+    """All video-frame chunk payloads of the first video stream from a
+    RIFF AVI 'movi' list, in stream order — the frame-extraction kernel
+    behind frame sampling. Each payload is one compressed frame (MJPEG
+    frames decode with :func:`decode_jpeg`)."""
+    return _avi_video_chunks(data)[1]
 
 
 def encode_avi(

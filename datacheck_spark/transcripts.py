@@ -704,7 +704,7 @@ class TranscriptChecker:
     """End-to-end transcript validation: ONE cached scan feeding
     (a) the fused rule projection + summary agg,
     (b) uniqueness on (conv_id, turn_idx),
-    (c) referential tool check (broadcast anti-join),
+    (c) referential tool check (a vocabulary sum in the summary agg),
     (d) text-length anomaly detection.
 
     This is the job shape the north rule prescribes; each consumer is a
@@ -737,14 +737,12 @@ class TranscriptChecker:
     def run(
         self,
         df: DataFrame,
-        tools_df: Optional[DataFrame] = None,
         detect_anomalies: bool = True,
     ) -> TranscriptCheckReport:
         """Anomalies report counts and bounds only, no offending-key
         sample (full rows live in the violations table)."""
         from datacheck_spark import anomaly as A
         from datacheck_spark import dedup as D
-        from datacheck_spark import referential as R
 
         rules = self.engine.compile(df)
         annotated = self.engine.annotate(df, rules=rules)
@@ -756,11 +754,9 @@ class TranscriptChecker:
             .persist()
         )
         try:
-            # the orphan-tool referential check broadcasts a tiny
-            # vocabulary, so it folds into the SAME summary aggregation
-            # as a conditional sum — one job fewer per run; the general
-            # anti-join (referential.orphan_count) remains the path for
-            # large dimension tables
+            # the orphan-tool referential check is a tiny vocabulary, so
+            # it folds into the SAME summary aggregation as a conditional
+            # sum — no join job
             orphan_expr = F.sum(
                 (
                     F.col("tool").isNotNull()
@@ -811,21 +807,7 @@ class TranscriptChecker:
                 or 0
             )
 
-            if tools_df is None:
-                # vocabulary-sized dimension: the orphan count came out
-                # of the summary agg above (no separate join job)
-                report.orphan_tools = int(
-                    base.extras.get("orphan_tools") or 0
-                )
-            else:
-                # arbitrary dimension table: broadcast/SMJ anti-join
-                report.orphan_tools = R.orphan_count(
-                    annotated.where(F.col("tool").isNotNull()),
-                    "tool",
-                    tools_df,
-                    "tool_name",
-                    broadcast_dim=True,
-                )
+            report.orphan_tools = int(base.extras.get("orphan_tools") or 0)
 
             if detect_anomalies:
                 stats = A.stats_from_values(

@@ -118,8 +118,6 @@ class TestJpegHeader:
             + b"\x03"
         )
         data = b"\xff\xd8" + app0 + sof0
-        if codecs._PIL:
-            pytest.skip("Pillow path parses full streams only")
         d = codecs.decode_jpeg_header(data)
         assert (d["width"], d["height"], d["channels"]) == (64, 48, 3)
 
@@ -309,8 +307,6 @@ class TestJpegFullCodec:
     @pytest.mark.parametrize("sub", ["444", "420"])
     @pytest.mark.parametrize("ri", [0, 3])
     def test_rgb_roundtrip(self, sub, ri):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         px = _gradient_rgb(29, 37)  # non-multiple-of-8 dims
         enc = codecs.encode_jpeg(
             px, quality=92, subsampling=sub, restart_interval=ri
@@ -323,8 +319,6 @@ class TestJpegFullCodec:
         assert _psnr(px, d["pixels"]) > (35 if sub == "444" else 24)
 
     def test_gray_roundtrip(self):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         g = (np.add.outer(np.arange(31) * 3, np.arange(22) * 5) % 256).astype(
             np.uint8
         )
@@ -336,8 +330,6 @@ class TestJpegFullCodec:
     def test_solid_color_near_exact(self):
         """A solid block has only a DC coefficient — quantization error
         is bounded by one code step, a semi-analytic correctness check."""
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         solid = np.full((24, 24, 3), (90, 160, 40), dtype=np.uint8)
         d = codecs.decode_jpeg(codecs.encode_jpeg(solid, quality=95))
         err = np.abs(d["pixels"].astype(int) - solid.astype(int)).max()
@@ -356,8 +348,6 @@ class TestJpegFullCodec:
         """MJPEG convention: frames carry no DHT — the decoder installs
         the Annex K standard tables and must decode bit-identically to
         the stream that declares the same tables explicitly."""
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         px = _gradient_rgb(24, 32)
         enc = codecs.encode_jpeg(px, quality=90)
         stripped = _strip_segments(enc, {0xC4})
@@ -370,8 +360,6 @@ class TestJpegFullCodec:
         """A frame that declares some tables but not the ones its scan
         names, or a short DRI segment, is corrupt input: ValueError,
         never KeyError/struct.error out of the decoder."""
-        if codecs._PIL:
-            pytest.skip("targets the pure decoder")
         enc = codecs.encode_jpeg(_gradient_rgb(16, 16), quality=90)
         no_chroma_ac = _strip_segments(enc, {0xC4}, table=0x11)
         no_chroma_q = _strip_segments(enc, {0xDB}, table=0x01)
@@ -383,8 +371,6 @@ class TestJpegFullCodec:
                 codecs.decode_jpeg(bad)
 
     def test_progressive_falls_back_to_header(self):
-        if codecs._PIL:
-            pytest.skip("Pillow decodes progressive streams")
         enc = bytearray(codecs.encode_jpeg(_gradient_rgb(16, 16)))
         i = enc.find(b"\xff\xc0")
         enc[i + 1] = 0xC2  # SOF0 -> SOF2 (progressive)
@@ -393,15 +379,11 @@ class TestJpegFullCodec:
         assert (d["width"], d["height"], d["channels"]) == (16, 16, 3)
 
     def test_header_stub_decodes_header_only(self):
-        if codecs._PIL:
-            pytest.skip("stub has no scan for Pillow either")
         d = codecs.decode_jpeg(codecs.encode_jpeg_header_stub(64, 32))
         assert d["pixels"] is None
         assert (d["width"], d["height"]) == (64, 32)
 
     def test_truncated_scan_degrades_not_crashes(self):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         enc = codecs.encode_jpeg(_gradient_rgb(24, 32), quality=90)
         sos = enc.find(b"\xff\xda")
         cut = enc[: sos + (len(enc) - sos) // 2]
@@ -418,8 +400,6 @@ class TestJpegFullCodec:
 
 class TestAviFrameExtraction:
     def test_video_frames_walk_and_decode(self):
-        if codecs._PIL:
-            pytest.skip("round-trip targets the pure decoder")
         px = _gradient_rgb(24, 32)
         frame = codecs.encode_jpeg(px, quality=88)
         avi = codecs.encode_avi(32, 24, n_frames=7, fps=25,
@@ -435,6 +415,32 @@ class TestAviFrameExtraction:
         with pytest.raises(ValueError):
             codecs.avi_video_frames(b"garbage")
 
+    def test_first_video_stream_in_movi_only(self):
+        """Stream 01's chunks inside 'movi' and a stray '00dc' chunk in
+        a non-'movi' LIST are not frames of the first video stream."""
+
+        def chunk(cid, body):
+            return cid + len(body).to_bytes(4, "little") + body + b"\x00" * (len(body) & 1)
+
+        frame = codecs.encode_jpeg(_gradient_rgb(24, 32), quality=88)
+        other = codecs.encode_jpeg(_gradient_rgb(16, 16), quality=50)
+        avi = codecs.encode_avi(32, 24, n_frames=4, fps=25, frame_payload=frame)
+        movi_at = avi.index(b"movi") - 8
+        stray = chunk(b"LIST", b"INFO" + chunk(b"00dc", other))
+        movi = chunk(
+            b"LIST",
+            b"movi"
+            + chunk(b"01dc", other)
+            + b"".join(chunk(b"00dc", frame) + chunk(b"01db", other) for _ in range(4)),
+        )
+        body = b"AVI " + avi[12:movi_at] + stray + movi
+        spliced = b"RIFF" + len(body).to_bytes(4, "little") + body
+
+        assert codecs.avi_video_frames(spliced) == [frame] * 4
+        d = codecs.decode_avi_header(spliced)
+        assert d["first_frame"] == frame
+        assert d["n_frame_chunks"] == 4
+
 
 def test_sample_video_frames_partial_tables_yield_error_rows(spark):
     """An AVI whose MJPEG frames lack the chroma AC Huffman table yields
@@ -443,8 +449,6 @@ def test_sample_video_frames_partial_tables_yield_error_rows(spark):
 
     from datacheck_spark import multimodal as MM
 
-    if codecs._PIL:
-        pytest.skip("targets the pure decoder")
     frame = _strip_segments(
         codecs.encode_jpeg(_gradient_rgb(24, 32), quality=88),
         {0xC4},

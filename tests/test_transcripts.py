@@ -123,6 +123,143 @@ def test_checkpoint_resume(spark, transcripts, tmp_path):
     assert state3.completed == []
 
 
+def _stored(spark, base):
+    """Stored violation rows as a multiset, without the bucket column."""
+    from collections import Counter
+
+    rows = spark.read.parquet(base + "/violations").drop("bucket").collect()
+    return Counter(tuple(r.asDict().items()) for r in rows)
+
+
+def _direct(checker, df):
+    from collections import Counter
+
+    return Counter(tuple(r.asDict().items()) for r in checker.violations(df).collect())
+
+
+def _assert_bucket_metrics(spark, df, base, n_buckets):
+    """Each bucket's manifest metrics equal groupBy recounts of that
+    bucket's input rows and stored violation rows."""
+    import json
+    from pathlib import Path
+
+    manifest = json.loads(Path(base, "manifest.json").read_text())
+    assert manifest["n_buckets"] == n_buckets
+    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
+    want_rows = dict(df.groupBy(bucket.alias("b")).count().collect())
+    stored = spark.read.parquet(base + "/violations")
+    want_viol = dict(stored.groupBy("bucket").count().collect())
+    got = {int(b): v["metrics"] for b, v in manifest["buckets"].items()}
+    assert sorted(got) == list(range(n_buckets))
+    for b, m in got.items():
+        assert m["rows"] == want_rows.get(b, 0), b
+        assert m["violations"] == want_viol.get(b, 0), b
+    assert sum(m["rows"] for m in got.values()) == df.count()
+    assert sum(m["violations"] for m in got.values()) == stored.count()
+
+
+def test_checkpoint_metrics_per_bucket(spark, transcripts, tmp_path):
+    """Per-bucket manifest metrics come from the write's observations:
+    each bucket records its own counts, not its group's totals."""
+    from datacheck_spark.checkpoint import checkpointed_violations
+
+    checker = TranscriptChecker(include_repetitive=False)
+    base = str(tmp_path / "ckpt")
+    checkpointed_violations(transcripts, checker, base, n_buckets=4, group_size=2)
+    _assert_bucket_metrics(spark, transcripts, base, 4)
+    assert _stored(spark, base) == _direct(checker, transcripts)
+
+
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, job count)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"ckpt-test-{uuid.uuid4()}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_checkpoint_one_job_per_group(spark, transcripts, tmp_path):
+    """Each bucket group is exactly one Spark job: the violation write
+    (with the Arrow UDF rule in the plan); its metrics are observed on
+    that write, with no count or read-back job."""
+    from datacheck_spark.checkpoint import checkpointed_violations
+
+    state, jobs = _jobs_in_group(
+        spark,
+        lambda: checkpointed_violations(
+            transcripts, TranscriptChecker(), str(tmp_path / "ckpt"),
+            n_buckets=8, group_size=3,
+        ),
+    )
+    assert len(state.completed) == 8
+    assert jobs == 3  # groups [0,1,2], [3,4,5], [6,7]
+
+
+def test_checkpoint_resume_after_failed_commit(spark, transcripts, tmp_path, monkeypatch):
+    """A run that dies right after its first manifest commit resumes
+    with only the remaining groups; the store then equals the direct
+    violation rows and the per-bucket metrics still sum."""
+    from datacheck_spark import checkpoint
+
+    checker = TranscriptChecker(include_repetitive=False)
+    base = str(tmp_path / "ckpt")
+    orig = checkpoint.save_state
+
+    def dying_save(state):
+        orig(state)
+        raise RuntimeError("killed after commit")
+
+    monkeypatch.setattr(checkpoint, "save_state", dying_save)
+    with pytest.raises(RuntimeError, match="killed after commit"):
+        checkpoint.checkpointed_violations(
+            transcripts, checker, base, n_buckets=8, group_size=3
+        )
+    assert checkpoint.load_state(base, "v1", "static", 8).completed == [0, 1, 2]
+
+    commits = []
+
+    def recording_save(state):
+        commits.append(state.completed)
+        orig(state)
+
+    monkeypatch.setattr(checkpoint, "save_state", recording_save)
+    state, jobs = _jobs_in_group(
+        spark,
+        lambda: checkpoint.checkpointed_violations(
+            transcripts, checker, base, n_buckets=8, group_size=3
+        ),
+    )
+    assert commits == [[0, 1, 2, 3, 4, 5], list(range(8))]
+    assert jobs == 2
+    assert state.completed == list(range(8))
+    assert _stored(spark, base) == _direct(checker, transcripts)
+    _assert_bucket_metrics(spark, transcripts, base, 8)
+
+
+def test_checkpoint_rebucket_starts_fresh(spark, transcripts, tmp_path):
+    """The bucket count is part of the lineage: re-running with another
+    ``n_buckets`` over a finished checkpoint rebuilds the store instead
+    of appending the remaining buckets' rows under new ids."""
+    from datacheck_spark.checkpoint import checkpointed_violations
+
+    checker = TranscriptChecker(include_repetitive=False)
+    base = str(tmp_path / "ckpt")
+    checkpointed_violations(transcripts, checker, base, n_buckets=4, group_size=2)
+    state = checkpointed_violations(
+        transcripts, checker, base, n_buckets=8, group_size=3
+    )
+    assert state.completed == list(range(8))
+    assert _stored(spark, base) == _direct(checker, transcripts)
+    _assert_bucket_metrics(spark, transcripts, base, 8)
+
+
 def test_contract_fixture_matches_generator(spark):
     """The committed contract fixture parquet must equal a fresh
     generate_transcripts run (the DuckDB oracles read the file; this
