@@ -51,7 +51,7 @@ def _manifest_path(base: str) -> Path:
 
 
 def load_state(
-    base: str, rule_version: str, snapshot_id: str, n_buckets: int = 32
+    base: str, rule_version: str, snapshot_id: str, n_buckets: int
 ) -> CheckpointState:
     """Load (or initialize) the manifest. A manifest written by a
     different rule version, input snapshot or bucket count is discarded —
@@ -102,8 +102,11 @@ def checkpointed_violations(
     state = load_state(base_path, rule_version, snapshot_id, n_buckets)
     if not state.buckets:
         # fresh lineage: rows left by another rule version, snapshot or
-        # bucket count would survive a dynamic overwrite
-        shutil.rmtree(out_dir, ignore_errors=True)
+        # bucket count would survive a dynamic overwrite. Only the
+        # bucket= partitions are this writer's; siblings (an incremental
+        # store's batch= dirs under the same base) are left alone.
+        for d in Path(out_dir).glob("bucket=*"):
+            shutil.rmtree(d)
     done = set(state.completed)
     pending = [b for b in range(n_buckets) if b not in done]
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")

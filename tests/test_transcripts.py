@@ -119,7 +119,7 @@ def test_checkpoint_resume(spark, transcripts, tmp_path):
     assert total_1 == direct
 
     # rule-version bump invalidates lineage
-    state3 = load_state(base, "v2", "static")
+    state3 = load_state(base, "v2", "static", 8)
     assert state3.completed == []
 
 
@@ -258,6 +258,29 @@ def test_checkpoint_rebucket_starts_fresh(spark, transcripts, tmp_path):
     assert state.completed == list(range(8))
     assert _stored(spark, base) == _direct(checker, transcripts)
     _assert_bucket_metrics(spark, transcripts, base, 8)
+
+
+def test_checkpoint_fresh_run_clears_only_bucket_partitions(spark, transcripts, tmp_path):
+    """A fresh run drops stale ``bucket=`` partitions but keeps any
+    other child of ``violations/``, such as an incremental store's
+    ``batch=`` directory sharing the same base."""
+    from datacheck_spark.checkpoint import checkpointed_violations
+
+    out = tmp_path / "ckpt" / "violations"
+    stale, sibling = out / "bucket=99", out / "batch=0"
+    for d in (stale, sibling):
+        d.mkdir(parents=True)
+        (d / "part-0.parquet").write_bytes(b"keep?")
+    state = checkpointed_violations(
+        transcripts, TranscriptChecker(include_repetitive=False),
+        str(tmp_path / "ckpt"), n_buckets=4, group_size=2,
+    )
+    assert state.completed == [0, 1, 2, 3]
+    assert not stale.exists()
+    assert (sibling / "part-0.parquet").read_bytes() == b"keep?"
+    assert {p.name for p in out.glob("bucket=*")} == {
+        f"bucket={b}" for b, v in state.buckets.items() if v["metrics"]["violations"]
+    }
 
 
 def test_contract_fixture_matches_generator(spark):

@@ -11,8 +11,8 @@ commit. The resume then runs in this process and must
 - leave a manifest whose per-bucket ``rows`` sum to the input row count
   and whose per-bucket ``violations`` sum to the stored rows.
 
-Usage: python tools/resume_drive.py [--convs 20000] [--buckets 32]
-[--group-size 4]   (local[4], 2 GB driver)
+Usage: python tools/resume_drive.py [--convs 20000]
+(local[4], 2 GB driver; 32 buckets in groups of 4)
 """
 
 import argparse
@@ -25,6 +25,9 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
+
+N_BUCKETS = 32
+GROUP_SIZE = 4
 
 
 def session():
@@ -55,7 +58,7 @@ def store(args, base: str):
     df = spark.read.parquet(bench.ensure_transcripts(spark, args.convs))
     state = CK.checkpointed_violations(
         df, TranscriptChecker(), base,
-        n_buckets=args.buckets, group_size=args.group_size,
+        n_buckets=N_BUCKETS, group_size=GROUP_SIZE,
     )
     return spark, df, state
 
@@ -76,8 +79,6 @@ def child(args) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--convs", type=int, default=20000)
-    ap.add_argument("--buckets", type=int, default=32)
-    ap.add_argument("--group-size", type=int, default=4)
     ap.add_argument("--child", help=argparse.SUPPRESS)
     args = ap.parse_args()
     if args.child:
@@ -85,15 +86,14 @@ def main() -> None:
 
     base = tempfile.mkdtemp(prefix="ckpt_drive_")
     r = subprocess.run(
-        [sys.executable, __file__, "--child", base, "--convs", str(args.convs),
-         "--buckets", str(args.buckets), "--group-size", str(args.group_size)],
+        [sys.executable, __file__, "--child", base, "--convs", str(args.convs)],
         capture_output=True, text=True, timeout=1800,
     )
     manifest = json.loads((Path(base) / "manifest.json").read_text())
     done_at_kill = sorted(int(b) for b, v in manifest["buckets"].items() if v.get("done"))
     print("child rc:", r.returncode, "| buckets done at kill:", done_at_kill)
     assert r.returncode == 137, r.stderr[-2000:]
-    assert done_at_kill == list(range(args.group_size))
+    assert done_at_kill == list(range(GROUP_SIZE))
 
     import datacheck_spark.checkpoint as CK
     from pyspark.sql import functions as F
@@ -111,9 +111,9 @@ def main() -> None:
     spark, df, state = store(args, base)
     CK.save_state = orig
     print("resumed: groups committed", len(commits), "| completed buckets:",
-          len(state.completed), "/", args.buckets)
-    assert state.completed == list(range(args.buckets))
-    assert commits[0] == min(2 * args.group_size, args.buckets)  # no group re-ran
+          len(state.completed), "/", N_BUCKETS)
+    assert state.completed == list(range(N_BUCKETS))
+    assert commits[0] == min(2 * GROUP_SIZE, N_BUCKETS)  # no group re-ran
 
     def xor_hash(d):
         return d.select(
